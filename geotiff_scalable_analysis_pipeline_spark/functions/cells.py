@@ -5,7 +5,8 @@ discrete global grid: a quadtree over the square frame ``[0, FRAME_SIZE)²``
 with Morton (Z-order) packed cell ids. This supplies every primitive the
 north rule needs:
 
-* ``cell_id(x, y, level)``  — batched encoding (numpy AND pure-Column forms)
+* ``cell_id(x, y, level)``  — batched encoding: numpy kernels for UDFs, Spark-SQL
+  string forms (``*_expr``) for plans, DuckDB mirrors (``*_sql``) for oracles
 * parent/child navigation   — ``morton >> 2`` per level (prefix containment)
 * neighbor / kRing expansion — Chebyshev rings on the (ix, iy) lattice
 * cell-range containment     — a level-L cell covers a contiguous Morton range
@@ -23,8 +24,6 @@ Cell id layout (fits a Spark LongType):
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 FRAME_SIZE = 131072.0  # 2**17 metres — covers the 100 km × 100 km synthetic frame
 MAX_LEVEL = 16
@@ -126,56 +125,27 @@ def disk_np(cell: int, r: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Pure-Column forms (stay inside whole-stage codegen — no UDF)
+# Spark-SQL string forms — the ONLY place a quad-cell id is built or decoded
+# inside a Spark plan. Arguments are SQL expressions; callers wrap the result
+# in one ``F.expr``/``selectExpr`` parse, because building the same tree
+# through Column operators pays one py4j round-trip per operator (a Morton
+# code has hundreds).
 # ---------------------------------------------------------------------------
 
 
-def lattice_col(coord: Column, level: int) -> Column:
-    """Lattice index of a coordinate at ``level`` as a Column (int64)."""
+def lattice_expr(coord: str, level: int) -> str:
+    """Lattice index (BIGINT, clamped to the frame) of the numeric ``coord``."""
     res = cell_res(level)
     n = (1 << level) - 1
-    ix = F.floor(coord / F.lit(res)).cast("long")
-    return F.greatest(F.lit(0), F.least(F.lit(n), ix))
-
-
-def morton_col(ix: Column, iy: Column, level: int) -> Column:
-    """Bit-interleave via shift/AND chain — Catalyst folds this to codegen."""
-    expr = F.lit(0).cast("long")
-    for b in range(level):
-        expr = (
-            expr
-            + F.shiftleft(F.shiftrightunsigned(ix, b).bitwiseAND(F.lit(1)), 2 * b)
-            + F.shiftleft(F.shiftrightunsigned(iy, b).bitwiseAND(F.lit(1)), 2 * b + 1)
-        )
-    return expr
-
-
-def cell_id_col(x: Column, y: Column, level: int) -> Column:
-    ix = lattice_col(x, level)
-    iy = lattice_col(y, level)
-    return F.shiftleft(morton_col(ix, iy, level), LEVEL_BITS) + F.lit(level)
-
-
-def parent_col(cell: Column, steps: int = 1) -> Column:
-    level = cell.bitwiseAND(F.lit((1 << LEVEL_BITS) - 1))
-    m = F.shiftrightunsigned(cell, LEVEL_BITS)
-    return F.shiftleft(F.shiftrightunsigned(m, 2 * steps), LEVEL_BITS) + (level - F.lit(steps))
-
-
-# ---------------------------------------------------------------------------
-# Spark-SQL string forms (round 6) — one F.expr parse instead of hundreds of
-# py4j round-trips. Building morton_col through Column operators costs
-# ~0.2 ms of driver↔JVM socket latency PER OPERATOR (measured: 58 ms per
-# morton_col call, ~0.4 s per pip_join construction — paid on every bench
-# rep); the string forms are byte-identical arithmetic (pinned by
-# tests/test_cells_geometry.py) parsed JVM-side in a single call. Analysis,
-# optimization and codegen see the same expression tree either way.
-# ---------------------------------------------------------------------------
+    return (
+        f"GREATEST(CAST(0 AS BIGINT), LEAST(CAST({n} AS BIGINT), "
+        f"CAST(FLOOR(({coord}) / {res!r}D) AS BIGINT)))"
+    )
 
 
 def morton_expr(ix: str, iy: str, level: int) -> str:
-    """Spark-SQL string computing the same Morton code as :func:`morton_col`
-    over the SQL expressions ``ix``/``iy`` (must be non-negative BIGINTs)."""
+    """Z-order code of the lattice indices ``ix``/``iy`` (non-negative
+    BIGINTs below ``2**level``) — the shift/AND chain folds into codegen."""
     if level == 0:
         return "CAST(0 AS BIGINT)"
     terms = []
@@ -185,21 +155,29 @@ def morton_expr(ix: str, iy: str, level: int) -> str:
     return "(CAST(0 AS BIGINT) + " + " + ".join(terms) + ")"
 
 
-def lattice_expr(coord: str, level: int) -> str:
-    """Spark-SQL mirror of :func:`lattice_col` over the SQL expression
-    ``coord`` (numeric)."""
-    res = cell_res(level)
-    n = (1 << level) - 1
-    return (
-        f"GREATEST(CAST(0 AS BIGINT), LEAST(CAST({n} AS BIGINT), "
-        f"CAST(FLOOR(({coord}) / {res!r}D) AS BIGINT)))"
-    )
+def cell_expr(ix: str, iy: str, level: int) -> str:
+    """Packed cell id of the lattice indices ``ix``/``iy`` at ``level``."""
+    return f"(shiftleft({morton_expr(ix, iy, level)}, {LEVEL_BITS}) + {level})"
 
 
 def cell_id_expr(x: str, y: str, level: int) -> str:
-    """Spark-SQL mirror of :func:`cell_id_col` over SQL expressions."""
-    m = morton_expr(lattice_expr(x, level), lattice_expr(y, level), level)
-    return f"(shiftleft({m}, {LEVEL_BITS}) + {level})"
+    """Packed cell id of the frame coordinates ``x``/``y`` at ``level``."""
+    return cell_expr(lattice_expr(x, level), lattice_expr(y, level), level)
+
+
+def level_expr(cell: str) -> str:
+    """Level (BIGINT) encoded in the low bits of ``cell``."""
+    return f"(({cell}) & {(1 << LEVEL_BITS) - 1})"
+
+
+def parent_expr(cell: str, steps: int | str = 1) -> str:
+    """Ancestor of ``cell`` ``steps`` levels up; ``steps`` is an int or a
+    per-row SQL expression."""
+    shift = 2 * steps if isinstance(steps, int) else f"({steps}) * 2"
+    return (
+        f"(shiftleft(shiftrightunsigned(shiftrightunsigned({cell}, {LEVEL_BITS}), {shift}), "
+        f"{LEVEL_BITS}) + ({level_expr(cell)} - ({steps})))"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -208,7 +186,7 @@ def cell_id_expr(x: str, y: str, level: int) -> str:
 
 
 def morton_sql(ix_expr: str, iy_expr: str, level: int) -> str:
-    """ANSI-SQL expression computing the same Morton code as ``morton_col``."""
+    """ANSI-SQL expression computing the same Morton code as ``morton_expr``."""
     terms = []
     for b in range(level):
         terms.append(f"((({ix_expr}) // {1 << b}) % 2) * {1 << (2 * b)}")

@@ -36,14 +36,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import (
-    FRAME_SIZE,
-    LEVEL_BITS,
-    MAX_LEVEL,
-    cell_id_expr,
-    lattice_expr,
-    morton_expr,
-)
+from ..functions.cells import FRAME_SIZE, MAX_LEVEL, cell_expr, cell_id_expr, lattice_expr
 from ..plans.skew import cpu_dense_repartition, small_enough_to_broadcast
 
 
@@ -93,8 +86,6 @@ def distance_join(
         )
     n = 1 << lvl
 
-    # single-parse SQL-string forms (functions/cells.py round-6 note):
-    # identical expression trees, ~hundreds fewer py4j round-trips per call
     pa = a.withColumn(
         "cell", F.expr(cell_id_expr(f"CAST(`{ax}` AS DOUBLE)", f"CAST(`{ay}` AS DOUBLE)", lvl))
     )
@@ -109,10 +100,7 @@ def distance_join(
         .withColumn("_nx", F.expr(f"{ix} + _o.dx"))
         .withColumn("_ny", F.expr(f"{iy} + _o.dy"))
         .filter(F.expr(f"_nx >= 0 AND _nx < {n} AND _ny >= 0 AND _ny < {n}"))
-        .withColumn(
-            "cell",
-            F.expr(f"shiftleft({morton_expr('_nx', '_ny', lvl)}, {LEVEL_BITS}) + {lvl}"),
-        )
+        .withColumn("cell", F.expr(cell_expr("_nx", "_ny", lvl)))
         .drop("_o", "_nx", "_ny")
     )
     if broadcast_b:

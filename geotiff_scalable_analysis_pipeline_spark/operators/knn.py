@@ -53,7 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import cell_res
+from ..functions.cells import cell_res, lattice_expr
 
 DEFAULT_LEVEL = 5
 
@@ -79,7 +79,7 @@ def pick_level(n_targets: int) -> int:
 
     The result is valid ONLY for the kNN lattice path (raw Morton codes at
     ``level`` bits per axis — no level packing): 17 exceeds
-    ``cells.MAX_LEVEL`` (16), so feeding it to ``cell_id_col``/``parent_col``
+    ``cells.MAX_LEVEL`` (16), so feeding it to ``cell_id_expr``/``parent_expr``
     would violate the packed cell-id layout contract documented in cells.py.
     The upper clamp only guards the Morton code width — 2·17 bits — and the
     lattice arithmetic; adaptive radii handle sparse/empty neighborhoods, so
@@ -129,9 +129,6 @@ def knn_join(
     runs under those confs for the duration; fine for a single-tenant
     job/bench session, serialize calls if the session is shared.
     """
-    import os as _os
-
-    dbg = _os.environ.get("GSAP_KNN_DEBUG") == "1"
     cached: list[DataFrame] = []
 
     tgt = targets.select(
@@ -149,13 +146,13 @@ def knn_join(
         # coordinates, so clamped edge cells still report true extrema).
         # One driver action instead of two sequential ones (round 6).
         glevel0 = min(level, GRID_MAX_LEVEL)
-        res0 = cell_res(glevel0)
-        n0 = (1 << glevel0) - 1
-        lat0 = lambda c: F.greatest(  # noqa: E731
-            F.lit(0), F.least(F.lit(n0), F.floor(F.col(c) / F.lit(res0)).cast("long"))
-        )
         cell_stats = (
-            tgt.select(lat0("_tx").alias("_ix"), lat0("_ty").alias("_iy"), "_tx", "_ty")
+            tgt.select(
+                F.expr(lattice_expr("_tx", glevel0)).alias("_ix"),
+                F.expr(lattice_expr("_ty", glevel0)).alias("_iy"),
+                "_tx",
+                "_ty",
+            )
             .groupBy("_ix", "_iy")
             .agg(
                 F.count("*").alias("_c"),
@@ -244,11 +241,11 @@ def knn_join(
     spark.conf.set(p_key, str(n_part))
     try:
         if n_targets < BLOCK_PASS_MIN_TARGETS:
-            out = _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, dbg, cached, grid_rows)
+            out = _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, cached, grid_rows)
         else:
             finished, escalated = _block_knn(
                 queries.sparkSession, q, tgt, k, target_id, targets.schema[target_id].dataType,
-                bbox_units, n_targets, dbg, cached,
+                bbox_units, n_targets, cached,
             )
             # escalated carries each failed query's kth-so-far from the block
             # pass (a valid upper bound on the true kth — it came from a
@@ -257,8 +254,8 @@ def knn_join(
             # (blocks with fewer than k targets) get theirs from the
             # count-grid oracle.
             rescued = _oneshot_knn(
-                q.join(escalated, "q_id"), tgt, k, glevel, target_id, n_targets, dbg,
-                cached, grid_rows,
+                q.join(escalated, "q_id"), tgt, k, glevel, target_id, n_targets, cached,
+                grid_rows,
             )
             out = finished.unionByName(rescued)
 
@@ -296,7 +293,7 @@ def knn_join(
     return out
 
 
-def _block_knn(spark, q, tgt, k, target_id, target_id_type, bbox_units, n_targets, dbg, cached):
+def _block_knn(spark, q, tgt, k, target_id, target_id_type, bbox_units, n_targets, cached):
     """One-shuffle block-local exact kNN; returns (finished_df, escalated)
     where escalated = (q_id, _kth0) — the failed queries with their kth-so-far
     squared distance (null when the block held fewer than k targets).
@@ -500,21 +497,10 @@ def _block_knn(spark, q, tgt, k, target_id, target_id_type, bbox_units, n_target
         .groupBy("q_id")
         .agg(F.max(F.when(F.col("rank") == k, F.col("dist_sq"))).alias("_kth0"))
     )
-    if dbg:
-        import sys
-
-        n_esc = escalated.count()
-        print(
-            f"# knn block pass: blocks={nb}x{nb} halo={halo:.0f} escalated={n_esc}",
-            file=sys.stderr,
-            flush=True,
-        )
     return finished, escalated
 
 
-
-
-def _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, dbg, cached, grid_rows=None):
+def _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, cached, grid_rows=None):
     """Single-action exact kNN finish: per-query provably-sufficient radius →
     one disk explode → one cell equi-join → one aggregate top-k.
 
@@ -543,12 +529,9 @@ def _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, dbg, cached, grid_rows
     res = cell_res(glevel)
     n = (1 << glevel) - 1
 
-    lat_t = lambda c: F.greatest(  # noqa: E731
-        F.lit(0), F.least(F.lit(n), F.floor(F.col(c) / F.lit(res)).cast("long"))
-    )
     tgtc = (
-        tgt.withColumn("_tix", lat_t("_tx"))
-        .withColumn("_tiy", lat_t("_ty"))
+        tgt.withColumn("_tix", F.expr(lattice_expr("_tx", glevel)))
+        .withColumn("_tiy", F.expr(lattice_expr("_ty", glevel)))
         .select(
             # packed (ix << 32) | iy — matches the emission in emit_cells
             # (a plain equi-join key; no locality requirement)
@@ -567,7 +550,10 @@ def _oneshot_knn(q, tgt, k, glevel, target_id, n_targets, dbg, cached, grid_rows
     # search for unbounded queries, it prunes EMPTY cells from every query's
     # candidate emission (the collect stays ≤ 65 k rows at GRID_MAX_LEVEL)
     rows = grid_rows if grid_rows is not None else (
-        tgt.select(lat_t("_tx").alias("_ix"), lat_t("_ty").alias("_iy"))
+        tgt.select(
+            F.expr(lattice_expr("_tx", glevel)).alias("_ix"),
+            F.expr(lattice_expr("_ty", glevel)).alias("_iy"),
+        )
         .groupBy("_ix", "_iy")
         .agg(F.count("*").alias("_c"))
         .collect()

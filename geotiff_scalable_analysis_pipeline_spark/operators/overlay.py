@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells import cell_id_col
+from ..functions.cells import cell_id_expr
 from ..plans.skew import cpu_dense_repartition, small_enough_to_broadcast
 from .pip_join import DEFAULT_LEVEL, cover_cells_rect
 
@@ -101,15 +101,12 @@ def overlay_rect_join(
             cb = cpu_dense_repartition(cb, "cell")
     j = ca.join(cb, "cell")
 
-    rx = F.greatest("a_minx", "b_minx")
-    ry = F.greatest("a_miny", "b_miny")
-    wx = F.least("a_maxx", "b_maxx") - rx
-    wy = F.least("a_maxy", "b_maxy") - ry
-    keep = (
-        (wx > 0)
-        & (wy > 0)
-        & (F.col("cell") == cell_id_col(rx.cast("double"), ry.cast("double"), level))
-    )
+    rx = "greatest(a_minx, b_minx)"
+    ry = "greatest(a_miny, b_miny)"
+    wx = F.least("a_maxx", "b_maxx") - F.expr(rx)
+    wy = F.least("a_maxy", "b_maxy") - F.expr(ry)
+    ref_cell = cell_id_expr(f"CAST({rx} AS DOUBLE)", f"CAST({ry} AS DOUBLE)", level)
+    keep = (wx > 0) & (wy > 0) & (F.col("cell") == F.expr(ref_cell))
     return j.filter(keep).select(
         F.col("a_id").alias("zone_a"),
         F.col("b_id").alias("zone_b"),

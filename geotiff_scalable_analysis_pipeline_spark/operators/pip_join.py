@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import geometry
-from ..functions.cells import LEVEL_BITS, cell_id_expr, lattice_expr, morton_expr
+from ..functions.cells import cell_expr, cell_id_expr, lattice_expr
 
 DEFAULT_LEVEL = 5  # 4096 m cells over the 131 km frame
 
@@ -40,9 +40,7 @@ DEFAULT_LEVEL = 5  # 4096 m cells over the 131 km frame
 def cover_cells_rect(df: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
     """Explode each bbox row (minx/miny/maxx/maxy) to its covering cells.
 
-    Pure Catalyst: sequence() over the lattice ranges — no UDF. Built from
-    the single-parse SQL-string forms (functions/cells.py round-6 note):
-    identical expression tree, ~hundreds fewer py4j round-trips per call.
+    Pure Catalyst: sequence() over the lattice ranges — no UDF.
     """
 
     def lat(c):
@@ -51,10 +49,7 @@ def cover_cells_rect(df: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
     return (
         df.withColumn("_ix", F.expr(f"explode(sequence({lat('minx')}, {lat('maxx')}))"))
         .withColumn("_iy", F.expr(f"explode(sequence({lat('miny')}, {lat('maxy')}))"))
-        .withColumn(
-            "cell",
-            F.expr(f"shiftleft({morton_expr('_ix', '_iy', level)}, {LEVEL_BITS}) + {level}"),
-        )
+        .withColumn("cell", F.expr(cell_expr("_ix", "_iy", level)))
         .drop("_ix", "_iy")
     )
 

@@ -352,12 +352,10 @@ def pyramid_rollup(footprints: DataFrame, n_levels: int) -> DataFrame:
     parent + distinct per level, because parent() is a function — the chain
     explode just materializes all levels of the lattice at once.
     """
-    from ..functions.cells import parent_col
+    from ..functions.cells import parent_expr
 
-    chain = footprints.select(
+    chain = footprints.selectExpr(
         "media_ref",
-        F.explode(
-            F.array(*[parent_col(F.col("cell"), s) for s in range(n_levels)])
-        ).alias("cell"),
+        f"explode(array({', '.join(parent_expr('cell', s) for s in range(n_levels))})) AS cell",
     )
     return chain.groupBy("cell").agg(F.count_distinct("media_ref").alias("n_tiles"))

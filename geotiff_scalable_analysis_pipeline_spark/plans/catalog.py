@@ -68,11 +68,10 @@ def zorder_layout(
     range in every file). ``repartitionByRange`` samples the Z-values to cut
     balanced files — at cluster scale that is one extra pass over the
     write's shuffle, paid once per commit."""
-    from ..functions.cells import cell_id_col
+    from ..functions.cells import cell_id_expr
 
-    z = cell_id_col(F.col(xcol), F.col(ycol), level)
     return (
-        df.withColumn("_z", z)
+        df.withColumn("_z", F.expr(cell_id_expr(f"`{xcol}`", f"`{ycol}`", level)))
         .repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")

@@ -1,10 +1,11 @@
 """Quadtree tile pyramid materialized as snapshot tables (north rule).
 
-Each pyramid level is the parent-rollup of the finer one (hierarchical
-aggregation — never recomputed from the leaves), partitioned by
-``(level, cell_anchor)`` where ``cell_anchor`` is the level-``anchor``
-ancestor cell: queries for a map viewport prune to the anchor partitions that
-intersect it, the storage analog of the reference's windowed block reads.
+Every level counts distinct tiles per cell, all levels in one parent-chain
+pass over the finest level's tile cells (operators/raster.pyramid_rollup).
+The table is partitioned by ``(level, cell_anchor)`` where ``cell_anchor`` is
+the level-``ANCHOR_LEVEL`` ancestor cell: queries for a map viewport prune
+to the anchor partitions that intersect it, the storage analog of the
+reference's windowed block reads.
 """
 
 from __future__ import annotations
@@ -12,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.cells import parent_col
-from ..operators.raster import tile_footprints
+from ..functions.cells import level_expr, parent_expr
+from ..operators.raster import pyramid_rollup, tile_footprints
 from .catalog import TableCatalog
 
 ANCHOR_LEVEL = 2  # 16 coarse partitions over the frame
@@ -28,27 +29,10 @@ def build_pyramid(
 ) -> int:
     """Materialize levels finest..coarsest; returns the snapshot id."""
     base = tile_footprints(tiles, finest).select("media_ref", "cell")
-    levels = []
-    cur = base
-    lv = finest
-    while True:
-        agg = cur.groupBy("cell").agg(F.count("*").alias("n_tiles"))
-        levels.append(agg.withColumn("level", F.lit(lv)))
-        if lv == coarsest:
-            break
-        cur = cur.select("media_ref", parent_col(F.col("cell")).alias("cell")).distinct()
-        lv -= 1
-    out = levels[0]
-    for df in levels[1:]:
-        out = out.unionByName(df)
-    # anchor = ancestor at ANCHOR_LEVEL; python shift wrappers need literal
-    # bit counts, so the variable-shift goes through a SQL expr
-    out = out.withColumn(
-        "cell_anchor",
-        F.expr(
-            "shiftleft(shiftrightunsigned(shiftrightunsigned(cell, 5),"
-            f" (level - {ANCHOR_LEVEL}) * 2), 5) + {ANCHOR_LEVEL}"
-        ),
+    out = (
+        pyramid_rollup(base, finest - coarsest + 1)
+        .withColumn("level", F.expr(f"CAST({level_expr('cell')} AS INT)"))
+        .withColumn("cell_anchor", F.expr(parent_expr("cell", f"level - {ANCHOR_LEVEL}")))
     )
     return catalog.commit(out, table, partition_by=["level", "cell_anchor"], mode="overwrite")
 

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import datagen as dg
-from .functions.cells import cell_id_sql, cell_res
+from .functions.cells import cell_id_sql, cell_res, level_expr
 from .operators import chunking, knn, pip_join, raster, spans, warp, zonal
 
 # fixed correctness-scale corpus (driver runs these at sf0.01)
@@ -510,7 +510,7 @@ def q_pyramid_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     levels — see operators/raster.pyramid_rollup)."""
     base = raster.tile_footprints(dg.tiles_df(spark, CFG), LEVEL).select("media_ref", "cell")
     return raster.pyramid_rollup(base, n_levels=4).withColumn(
-        "level", (F.col("cell") % 32).cast("int")
+        "level", F.expr(f"CAST({level_expr('cell')} AS INT)")
     )
 
 

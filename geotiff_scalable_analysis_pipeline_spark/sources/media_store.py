@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.cells import cell_id_col
+from ..functions.cells import cell_id_expr
 from ..plans.catalog import TableCatalog
 
 MEDIA_ANCHOR_LEVEL = 3
@@ -31,7 +31,7 @@ def write_media_store(
     queries prune payload files before any byte is read."""
     meta = tiles_meta.select(
         "media_ref",
-        cell_id_col(F.col("cx").cast("double"), F.col("cy").cast("double"), MEDIA_ANCHOR_LEVEL)
+        F.expr(cell_id_expr("CAST(cx AS DOUBLE)", "CAST(cy AS DOUBLE)", MEDIA_ANCHOR_LEVEL))
         .alias("cell_anchor"),
     )
     df = media.join(meta, "media_ref")

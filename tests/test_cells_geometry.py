@@ -91,18 +91,34 @@ def test_bbox_tree_matches_bruteforce():
     assert got == expect
 
 
-def test_cell_expr_forms_match_column_forms(spark):
-    """The round-6 SQL-string builders (one F.expr parse — hundreds fewer
-    py4j round-trips per operator construction) must be bit-identical to
-    the Column forms at every level."""
+def test_cell_exprs_match_numpy_kernels(spark):
+    """The Spark-SQL string forms equal the numpy kernels at every level:
+    cell id (including coordinates clamped at both frame edges), the level
+    bits, a fixed-step parent and a per-row step count (the pyramid anchor's
+    form)."""
     from pyspark.sql import functions as F
 
     df = spark.range(5000).select(
-        ((F.col("id") * 2654435761) % 131072).cast("double").alias("x"),
-        ((F.col("id") * 40503) % 131072).cast("double").alias("y"),
+        F.col("id"),
+        (((F.col("id") * 2654435761) % 132000) - 500).cast("double").alias("x"),
+        (((F.col("id") * 40503) % 132000) - 500).cast("double").alias("y"),
     )
     for lvl in (0, 1, 5, 9, 16):
-        a = df.select(cells.cell_id_col(F.col("x"), F.col("y"), lvl).alias("c"))
-        b = df.select(F.expr(cells.cell_id_expr("x", "y", lvl)).alias("c"))
-        assert a.schema["c"].dataType == b.schema["c"].dataType
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+        c = cells.cell_id_expr("x", "y", lvl)
+        fixed = min(lvl, 3)
+        rows = df.selectExpr(
+            "x",
+            "y",
+            f"id % {lvl + 1} AS s",
+            f"{c} AS c",
+            f"{cells.level_expr(c)} AS lv",
+            f"{cells.parent_expr(c, fixed)} AS p",
+            f"{cells.parent_expr(c, f'id % {lvl + 1}')} AS ps",
+        ).toPandas()
+        cid = cells.cell_id_np(rows["x"].to_numpy(), rows["y"].to_numpy(), lvl)
+        steps = rows["s"].to_numpy()
+        assert np.array_equal(rows["c"].to_numpy(), cid)
+        assert (rows["lv"] == lvl).all()
+        assert np.array_equal(rows["p"].to_numpy(), cells.parent_np(cid, fixed))
+        assert np.array_equal(rows["ps"].to_numpy(), cells.parent_np(cid, steps))
+        assert np.array_equal(cells.cell_xy_np(rows["ps"].to_numpy())[2], lvl - steps)

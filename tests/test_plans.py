@@ -1,13 +1,18 @@
 """Snapshot catalog, lineage resume, metrics, pyramid pruning."""
 
 import json
+from collections import Counter
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from geotiff_scalable_analysis_pipeline_spark import datagen as dg
-from geotiff_scalable_analysis_pipeline_spark.functions.cells import cell_id_np
+from geotiff_scalable_analysis_pipeline_spark.functions.cells import (
+    cell_id_np,
+    cell_res,
+    cell_xy_np,
+)
 from geotiff_scalable_analysis_pipeline_spark.plans import lineage, metrics, pyramid
 from geotiff_scalable_analysis_pipeline_spark.plans.catalog import TableCatalog
 
@@ -157,12 +162,28 @@ def test_pyramid_build_and_viewport_pruning(spark, tmp_path):
     assert rows and all(r["level"] == 6 and r["cell_anchor"] == anchor for r in rows)
     files = vp.inputFiles()
     assert files and all(f"cell_anchor={anchor}" in f for f in files)
-    # hierarchical consistency: total tile-cell memberships shrink with level
-    per_level = {
-        r["level"]: r["s"]
-        for r in full.groupBy("level").agg(F.sum("n_tiles").alias("s")).collect()
-    }
-    assert per_level[5] <= per_level[6] <= per_level[7]
+    # every committed row equals a per-level numpy count of distinct tiles
+    got = sorted(
+        tuple(r) for r in full.select("level", "cell", "n_tiles", "cell_anchor").collect()
+    )
+    assert got == _pyramid_np(cfg, finest=7, coarsest=5)
+
+
+def _pyramid_np(cfg, finest, coarsest):
+    """(level, cell, n_tiles, cell_anchor) rows from the numpy cell kernels:
+    each tile's half-open footprint covers a lattice rectangle per level."""
+    t = dg.tiles_np(cfg)
+    counts = Counter()
+    for lv in range(coarsest, finest + 1):
+        res = cell_res(lv)
+        ix0, iy0, _ = cell_xy_np(cell_id_np(t["x0"], t["y0"], lv))
+        ix1, iy1, _ = cell_xy_np(cell_id_np(t["x1"] - 1, t["y1"] - 1, lv))
+        for a0, a1, b0, b1 in zip(ix0, ix1, iy0, iy1):
+            gx, gy = np.meshgrid(np.arange(a0, a1 + 1), np.arange(b0, b1 + 1))
+            x, y = gx.ravel() * res, gy.ravel() * res
+            for c, anchor in zip(cell_id_np(x, y, lv), cell_id_np(x, y, pyramid.ANCHOR_LEVEL)):
+                counts[(lv, int(c), int(anchor))] += 1
+    return sorted((lv, c, n, anchor) for (lv, c, anchor), n in counts.items())
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):

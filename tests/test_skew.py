@@ -4,7 +4,7 @@ salting, exactness of two-stage aggregation."""
 from pyspark.sql import functions as F
 
 from geotiff_scalable_analysis_pipeline_spark import datagen as dg
-from geotiff_scalable_analysis_pipeline_spark.functions.cells import cell_id_col
+from geotiff_scalable_analysis_pipeline_spark.functions.cells import cell_id_expr
 from geotiff_scalable_analysis_pipeline_spark.operators import spans
 from geotiff_scalable_analysis_pipeline_spark.plans import skew
 
@@ -14,7 +14,8 @@ CFG = dg.GoldenConfig(n_tiles=500, n_docs=3000)
 def _media_span_cells(spark):
     m = spans.media_spans(dg.documents_df(spark, CFG))
     tiles = dg.tiles_df(spark, CFG).select(
-        "media_ref", cell_id_col(F.col("cx").cast("double"), F.col("cy").cast("double"), 5).alias("cell")
+        "media_ref",
+        F.expr(cell_id_expr("CAST(cx AS DOUBLE)", "CAST(cy AS DOUBLE)", 5)).alias("cell"),
     )
     return m.join(tiles, "media_ref")
 
