@@ -8,7 +8,7 @@ north rule needs:
 * ``cell_id(x, y, level)``  — batched encoding: numpy kernels for UDFs, Spark-SQL
   string forms (``*_expr``) for plans, DuckDB mirrors (``*_sql``) for oracles
 * parent/child navigation   — ``morton >> 2`` per level (prefix containment)
-* neighbor / kRing expansion — Chebyshev rings on the (ix, iy) lattice
+* neighbor expansion        — Chebyshev offsets on the (ix, iy) lattice
 * cell-range containment     — a level-L cell covers a contiguous Morton range
   at any finer level (quadtree locality → partition-prunable storage layout)
 
@@ -97,31 +97,6 @@ def parent_np(cell: np.ndarray, steps: int = 1) -> np.ndarray:
     level = cell & ((1 << LEVEL_BITS) - 1)
     m = cell >> LEVEL_BITS
     return ((m >> (2 * steps)) << LEVEL_BITS) | (level - steps)
-
-
-def k_ring_np(cell: int, r: int) -> np.ndarray:
-    """Cells at Chebyshev distance exactly ``r`` (ring), clipped to the frame."""
-    ix, iy, level = cell_xy_np(np.array([cell]))
-    ix, iy, level = int(ix[0]), int(iy[0]), int(level[0])
-    n = 1 << level
-    if r == 0:
-        return np.array([cell], dtype=np.int64)
-    dxs, dys = [], []
-    for d in range(-r, r + 1):
-        dxs += [d, d]
-        dys += [-r, r]
-    for d in range(-r + 1, r):
-        dxs += [-r, r]
-        dys += [d, d]
-    nx = np.asarray(dxs) + ix
-    ny = np.asarray(dys) + iy
-    ok = (nx >= 0) & (nx < n) & (ny >= 0) & (ny < n)
-    return ((morton_np(nx[ok], ny[ok]) << LEVEL_BITS) | level).astype(np.int64)
-
-
-def disk_np(cell: int, r: int) -> np.ndarray:
-    """All cells within Chebyshev distance ``r`` (filled disk)."""
-    return np.concatenate([k_ring_np(cell, i) for i in range(r + 1)])
 
 
 # ---------------------------------------------------------------------------

@@ -22,7 +22,7 @@ endpoint distance² where an endpoint is nearest, else
 engines reproduce bit-for-bit (the true interior distance² is rational).
 
 Scale shape: a segment covers the grid cells of its r-expanded bbox (two
-bounded ``sequence`` explodes — fan-out (len/cell+3)·(…), guarded by
+bounded ``sequence`` explodes — fan-out (len/r+3)·(…), guarded by
 ``max_cover_cells``); a point lives in its ONE home cell, so the hash
 equi-join on the cell key sees every within-r pair exactly once — no
 distinct, no window, no CartesianProduct. Long polylines must arrive
@@ -45,7 +45,6 @@ def segment_distance_join(
     points: DataFrame,
     segments: DataFrame,
     radius: int,
-    cell: int | None = None,
     px: str = "qx",
     py: str = "qy",
     max_cover_cells: int = 4096,
@@ -55,21 +54,18 @@ def segment_distance_join(
     ``points``: any columns + integer ``px``/``py``. ``segments``: any
     columns + integer ``x1 y1 x2 y2``. Returns both sides' columns +
     ``nearest`` ('start' | 'interior' | 'end') + ``dist_sq`` (see module
-    doc). ``cell`` defaults to ``radius``. A segment whose r-expanded
+    doc). The grid cell edge is ``radius``. A segment whose r-expanded
     bbox covers more than ``max_cover_cells`` grid cells raises — split
     polylines into bounded segments upstream.
     """
     if radius <= 0:
         raise ValueError(f"radius must be positive; got {radius}")
-    c = radius if cell is None else cell
-    if c <= 0:
-        raise ValueError(f"cell must be positive; got {cell}")
 
     bounds = (
-        segments.withColumn("_ci0", F.expr(f"(least(x1, x2) - {radius}) div {c}"))
-        .withColumn("_ci1", F.expr(f"(greatest(x1, x2) + {radius}) div {c}"))
-        .withColumn("_cj0", F.expr(f"(least(y1, y2) - {radius}) div {c}"))
-        .withColumn("_cj1", F.expr(f"(greatest(y1, y2) + {radius}) div {c}"))
+        segments.withColumn("_ci0", F.expr(f"(least(x1, x2) - {radius}) div {radius}"))
+        .withColumn("_ci1", F.expr(f"(greatest(x1, x2) + {radius}) div {radius}"))
+        .withColumn("_cj0", F.expr(f"(least(y1, y2) - {radius}) div {radius}"))
+        .withColumn("_cj1", F.expr(f"(greatest(y1, y2) + {radius}) div {radius}"))
     )
     fan = (F.col("_ci1") - F.col("_ci0") + 1) * (F.col("_cj1") - F.col("_cj0") + 1)
     # the guard rides the used _ci0 column so column pruning cannot drop it
@@ -89,8 +85,8 @@ def segment_distance_join(
         .withColumn("_cj", F.explode(F.expr("sequence(_cj0, _cj1)")))
         .drop("_ci0", "_ci1", "_cj0", "_cj1")
     )
-    p = points.withColumn("_ci", F.expr(f"{px} div {c}")).withColumn(
-        "_cj", F.expr(f"{py} div {c}")
+    p = points.withColumn("_ci", F.expr(f"{px} div {radius}")).withColumn(
+        "_cj", F.expr(f"{py} div {radius}")
     )
 
     # the pair-predicate stage is CPU-dense but byte-light (~56 B rows of

@@ -115,7 +115,6 @@ def dbscan(
     id_col: str = "q_id",
     x_col: str = "qx",
     y_col: str = "qy",
-    level: int | None = None,
     max_driver_cells: int = 1 << 17,
 ) -> DataFrame:
     """Cluster ``points`` (integer coords) with exact Euclidean DBSCAN.
@@ -150,8 +149,7 @@ def dbscan(
             if old in bb.columns:
                 bb = bb.withColumnRenamed(old, new)
         return distance_join(
-            a, bb, radius=eps, ax="qx", ay="qy", bx="px", by="py", level=level,
-            pin_width=pin,
+            a, bb, radius=eps, ax="qx", ay="qy", bx="px", by="py", pin_width=pin,
         )
 
     # The ε-join is RECOMPUTED per consumer instead of materialized once:

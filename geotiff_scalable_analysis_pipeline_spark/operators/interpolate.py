@@ -50,7 +50,6 @@ def idw(
     oy: str = "cy",
     value: str = "v",
     oid: str | None = None,
-    level: int | None = None,
 ) -> DataFrame:
     """One row per query point: ``(qid, n_obs, est)``.
 
@@ -61,7 +60,7 @@ def idw(
     q = queries.select(qid, qx, qy)
     o_cols = [ox, oy, value] + ([oid] if oid else [])
     pairs = distance_join(
-        q, obs.select(*o_cols), radius=radius, ax=qx, ay=qy, bx=ox, by=oy, level=level
+        q, obs.select(*o_cols), radius=radius, ax=qx, ay=qy, bx=ox, by=oy
     )  # width/broadcast decision is distance_join's size-estimate gate
     # integer floor division (float `/` + cast can round across an integer
     # boundary and diverge from DuckDB's exact `//`); greatest(d², 1) keeps

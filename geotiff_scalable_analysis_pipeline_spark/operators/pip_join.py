@@ -85,7 +85,7 @@ def pip_join_poly(
     y: str = "qy",
     level: int = DEFAULT_LEVEL,
 ) -> DataFrame:
-    """points ⋈ polygon zones (even-odd ray cast), STRtree-style prefilter.
+    """points ⋈ polygon zones (even-odd ray cast), cell-cover prefilter.
 
     ``poly_zones``: (zone_id, ring array<struct<x,y>>). The zone table is a
     small dim: rings are collected once on the driver, their covering cells

@@ -13,8 +13,13 @@ cancel. So the operator returns the four EXACT integer components
 ``(n_cells, w_pairs, moran_num, moran_den)`` with
 ``I = (n_cells / w_pairs) · (moran_num / moran_den)`` — the division is
 the caller's (one scalar; no cross-engine rounding surface at all).
-``moran_num``/``moran_den`` are decimal128 (u reaches n·x ≈ corpus², and
-its square crosses int64; DuckDB mirrors with HUGEINT).
+``moran_num``/``moran_den`` are summed in decimal128 (u reaches n·x ≈
+corpus², and its square crosses int64; DuckDB mirrors with HUGEINT) and
+each is emitted as an exact int64 pair ``v = v_hi·2³² + v_lo`` with
+``0 ≤ v_lo < 2³²`` (the hi/lo split of ``warp_mosaic_stats_gcp_full``):
+plain BIGINT output columns, because a decimal column fetched through
+pandas renders as float64 on DuckDB and Decimal on Spark and can never
+hash-match.
 
 Study region: the OCCUPIED cells passed in (the sparse-lattice
 convention — callers densify first if zeros are part of their region).
@@ -32,13 +37,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 D38 = "CAST({} AS DECIMAL(38,0))"
+SPLIT = 1 << 32
 
 
 def morans_i_components(
     cells: DataFrame, x: str = "x", ci: str = "ci", cj: str = "cj"
 ) -> DataFrame:
-    """One row: ``(n_cells, w_pairs, moran_num, moran_den)`` — see module
-    doc. ``cells`` must hold one row per occupied cell."""
+    """One row: ``(n_cells, w_pairs, moran_num_hi, moran_num_lo,
+    moran_den_hi, moran_den_lo)`` — see module doc. ``cells`` must hold one
+    row per occupied cell."""
     base = cells.select(
         F.col(ci).alias("ci"), F.col(cj).alias("cj"), F.col(x).cast("long").alias("x")
     )
@@ -70,9 +77,19 @@ def morans_i_components(
     return den.crossJoin(num).select(
         F.col("n_cells").cast("long").alias("n_cells"),
         F.col("w_pairs").cast("long").alias("w_pairs"),
-        F.col("moran_num").cast("decimal(38,0)").alias("moran_num"),
-        F.col("moran_den").cast("decimal(38,0)").alias("moran_den"),
+        *_hi_lo("moran_num"),
+        *_hi_lo("moran_den"),
     )
+
+
+def _hi_lo(name: str) -> list:
+    """``name`` (an exact decimal) as ``(name_hi, name_lo)`` int64 columns
+    with ``name = name_hi·2³² + name_lo`` and ``0 ≤ name_lo < 2³²``."""
+    lo = f"pmod({name}, {SPLIT})"
+    return [
+        F.expr(f"({name} - {lo}) div {SPLIT}").cast("long").alias(f"{name}_hi"),
+        F.expr(lo).cast("long").alias(f"{name}_lo"),
+    ]
 
 
 def morans_i_sql(cells_cte: str, cells_alias: str, x: str = "x") -> str:
@@ -88,11 +105,17 @@ nbr AS (
 num AS (
   SELECT count(*) AS w_pairs, sum(n.u_src * u.u) AS moran_num
   FROM nbr n JOIN u ON u.ci = n.ci AND u.cj = n.cj),
-den AS (SELECT count(*) AS n_cells, sum(u * u) AS moran_den FROM u)
+den AS (SELECT count(*) AS n_cells, sum(u * u) AS moran_den FROM u),
+s AS (
+  SELECT *, (moran_num % {SPLIT} + {SPLIT}) % {SPLIT} AS num_lo,
+         (moran_den % {SPLIT} + {SPLIT}) % {SPLIT} AS den_lo
+  FROM den CROSS JOIN num)
 SELECT CAST(n_cells AS BIGINT) AS n_cells, CAST(w_pairs AS BIGINT) AS w_pairs,
-       CAST(moran_num AS DECIMAL(38,0)) AS moran_num,
-       CAST(moran_den AS DECIMAL(38,0)) AS moran_den
-FROM den CROSS JOIN num"""
+       CAST((moran_num - num_lo) // {SPLIT} AS BIGINT) AS moran_num_hi,
+       CAST(num_lo AS BIGINT) AS moran_num_lo,
+       CAST((moran_den - den_lo) // {SPLIT} AS BIGINT) AS moran_den_hi,
+       CAST(den_lo AS BIGINT) AS moran_den_lo
+FROM s"""
 
 
 def local_moran_components(

@@ -4,10 +4,10 @@ AQE's skew-join splitting only helps *shuffle joins*; a skewed ``groupBy``
 key or a hot broadcast-probe cell still lands on one task. This module makes
 the salting decision data-driven, the way the driver would on a real cluster:
 
-1. :func:`hot_keys` — sample-based key histogram → keys whose share exceeds
-   ``threshold`` × the mean;
-2. :func:`salt_plan` — per-key salt factor sized so each salted partition
-   holds ≈ the mean key load;
+1. :func:`key_histogram` — exact per-key row counts;
+2. :func:`salt_plan` — keys whose count exceeds ``threshold`` × the mean
+   get a salt factor sized so each salted partition holds ≈ the mean key
+   load (capped at ``MAX_SALTS``);
 3. :func:`apply_salts` — deterministic salt column (hash of a stable row
    attribute, never rand() — resume semantics require reproducible salts)
    joined from the (tiny, broadcast) salt plan; follow with two-stage
@@ -23,16 +23,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# cap on one hot key's salt factor (its shuffle fan-out)
+MAX_SALTS = 64
 
-def key_histogram(df: DataFrame, key: str, sample_fraction: float | None = None) -> DataFrame:
-    """(key, cnt) — optionally from a deterministic sample (seeded)."""
-    d = df.sample(fraction=sample_fraction, seed=42) if sample_fraction else df
-    return d.groupBy(key).agg(F.count("*").alias("cnt"))
+# rounds per core of an explicit CPU-dense shuffle (cpu_dense_repartition)
+WAVES = 4
 
 
-def salt_plan(hist: DataFrame, key: str, threshold: float = 4.0, max_salts: int = 64) -> DataFrame:
+def key_histogram(df: DataFrame, key: str) -> DataFrame:
+    """(key, cnt) over every row."""
+    return df.groupBy(key).agg(F.count("*").alias("cnt"))
+
+
+def salt_plan(hist: DataFrame, key: str, threshold: float = 4.0) -> DataFrame:
     """Keys hotter than ``threshold``× the mean get ``ceil(cnt/mean)`` salts
-    (capped). Returns (key, n_salts) — empty if the distribution is flat.
+    (capped at ``MAX_SALTS``). Returns (key, n_salts) — empty if the
+    distribution is flat.
 
     Lazy by construction (round 6): the mean rides along as a broadcast
     1-row aggregate instead of a driver ``first()`` — callers that
@@ -46,7 +52,7 @@ def salt_plan(hist: DataFrame, key: str, threshold: float = 4.0, max_salts: int 
         .select(
             key,
             F.least(
-                F.lit(max_salts), F.ceil(F.col("cnt") / F.col("_mean_cnt")).cast("int")
+                F.lit(MAX_SALTS), F.ceil(F.col("cnt") / F.col("_mean_cnt")).cast("int")
             ).alias("n_salts"),
         )
     )
@@ -157,8 +163,8 @@ def small_enough_to_broadcast(df: DataFrame, fanout: int = 1) -> bool:
     return 0 < fanout * est <= broadcast_threshold_bytes(df.sparkSession)
 
 
-def cpu_dense_repartition(df: DataFrame, *cols: str, waves: int = 4) -> DataFrame:
-    """Pin a CPU-dense shuffle's width to ``waves × defaultParallelism``.
+def cpu_dense_repartition(df: DataFrame, *cols: str) -> DataFrame:
+    """Pin a CPU-dense shuffle's width to ``WAVES × defaultParallelism``.
 
     AQE's partition coalescing is BYTE-based (advisoryPartitionSizeInBytes):
     a stage whose shuffle blocks are small but whose per-row CPU is large —
@@ -166,7 +172,7 @@ def cpu_dense_repartition(df: DataFrame, *cols: str, waves: int = 4) -> DataFram
     gets coalesced to a handful of tasks, serializing the job (measured:
     the per-doc top-k aggregate in ``q_doc_keywords`` at 600 k docs ran as
     a 2-task stage at local[8]; 119 s → 47 s once widened). An EXPLICIT
-    ``repartition(n, cols)`` is exempt from AQE coalescing, and ``waves``
+    ``repartition(n, cols)`` is exempt from AQE coalescing, and ``WAVES``
     rounds per core amortize stragglers/skew the way a one-wave
     shuffle-partitions=cores layout cannot (same lesson as the knn block
     pass, BENCH/BASELINE.md round-4 provenance).
@@ -177,5 +183,5 @@ def cpu_dense_repartition(df: DataFrame, *cols: str, waves: int = 4) -> DataFram
     scales with the cluster, so the width stays proportional everywhere.
     """
     spark = df.sparkSession
-    n = max(1, waves * spark.sparkContext.defaultParallelism)
+    n = max(1, WAVES * spark.sparkContext.defaultParallelism)
     return df.repartition(n, *[F.col(c) for c in cols])

@@ -26,15 +26,6 @@ def test_parent_is_prefix():
         )
 
 
-def test_kring_sizes_and_frame_clip():
-    c = cells.cell_id_np(np.array([65000.0]), np.array([65000.0]), 6)[0]
-    assert len(cells.k_ring_np(int(c), 0)) == 1
-    assert len(cells.k_ring_np(int(c), 1)) == 8
-    assert len(cells.k_ring_np(int(c), 2)) == 16
-    corner = cells.cell_id_np(np.array([1.0]), np.array([1.0]), 3)[0]
-    assert len(cells.k_ring_np(int(corner), 1)) == 3  # clipped at frame edge
-
-
 def test_pip_square_edge_semantics():
     sq = np.array([(0, 0), (10, 0), (10, 10), (0, 10)])
     px = np.array([5, 15, 10, 0, 10, 5, 0])
@@ -69,26 +60,6 @@ def test_pip_matches_shoelace_winding_for_convex(cx, cy, r, npts):
     got = geometry.points_in_polygon(px, py, ring)
     assert got[inner].all()
     assert not got[outer].any()
-
-
-def test_bbox_tree_matches_bruteforce():
-    rng = np.random.default_rng(3)
-    n = 200
-    minx = rng.uniform(0, 90000, n)
-    miny = rng.uniform(0, 90000, n)
-    maxx = minx + rng.uniform(100, 9000, n)
-    maxy = miny + rng.uniform(100, 9000, n)
-    tree = geometry.PackedBBoxTree(minx, miny, maxx, maxy, np.arange(n))
-    px = rng.uniform(0, 100000, 500)
-    py = rng.uniform(0, 100000, 500)
-    pt, bid = tree.query_points(px, py)
-    got = set(zip(pt.tolist(), bid.tolist()))
-    expect = set()
-    for i in range(500):
-        for j in range(n):
-            if minx[j] <= px[i] <= maxx[j] and miny[j] <= py[i] <= maxy[j]:
-                expect.add((i, j))
-    assert got == expect
 
 
 def test_cell_exprs_match_numpy_kernels(spark):

@@ -140,19 +140,18 @@ def test_canon_is_type_aware():
     assert _canon([Decimal("7"), None]) == _canon([Decimal("7"), None])
 
 
-def test_morans_oracle_fetches_decimal(duck_views):
-    """Regression for CORRECTNESS_r04's one red row: the morans oracle must
-    emit DECIMAL(38,0) (fetched as decimal.Decimal, matching Spark's
-    decimal(38,0)) — not HUGEINT (fetched as int, which the driver's
-    hasher canonicalizes differently).  Fails on the pre-round-5
-    ``morans_i_sql`` and passes after the CAST fix."""
-    res = duck_views.execute(entrymod.oracle_sql()["morans_i_tiles"])
-    cols = [d[0] for d in res.description]
-    row = res.fetchone()
-    by = dict(zip(cols, row))
-    assert isinstance(by["moran_num"], Decimal), type(by["moran_num"])
-    assert isinstance(by["moran_den"], Decimal), type(by["moran_den"])
-    assert isinstance(by["n_cells"], int) and isinstance(by["w_pairs"], int)
+def test_morans_oracle_fetches_int64(duck_views):
+    """Regression for the ``morans_i_tiles`` hash mismatch: the oracle must
+    emit only BIGINT columns.  A DECIMAL(38,0) column (the round-5 fix)
+    fetches as float64 through pandas on DuckDB but as decimal.Decimal on
+    Spark, so a value hash over a pandas fetch can never match; the exact
+    numerator and denominator therefore travel as hi/lo int64 pairs."""
+    pdf = duck_views.execute(entrymod.oracle_sql()["morans_i_tiles"]).df()
+    assert len(pdf.columns) == 6 and (pdf.dtypes == "int64").all(), pdf.dtypes
+    by = {c: int(v) for c, v in pdf.iloc[0].items()}
+    assert 0 <= by["moran_num_lo"] < 2**32 and 0 <= by["moran_den_lo"] < 2**32
+    # hotspot-clustered tiles: strongly positive autocorrelation
+    assert by["moran_num_hi"] * 2**32 + by["moran_num_lo"] > 0
 
 
 def test_entry_smoke(spark):

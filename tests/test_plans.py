@@ -1,4 +1,4 @@
-"""Snapshot catalog, lineage resume, metrics, pyramid pruning."""
+"""Snapshot catalog, lineage resume, pyramid pruning."""
 
 import json
 from collections import Counter
@@ -13,7 +13,7 @@ from geotiff_scalable_analysis_pipeline_spark.functions.cells import (
     cell_res,
     cell_xy_np,
 )
-from geotiff_scalable_analysis_pipeline_spark.plans import lineage, metrics, pyramid
+from geotiff_scalable_analysis_pipeline_spark.plans import lineage, pyramid
 from geotiff_scalable_analysis_pipeline_spark.plans.catalog import TableCatalog
 
 
@@ -124,29 +124,6 @@ def test_resume_after_kill_is_byte_identical(spark, tmp_path):
     assert r3 == {"processed": 8, "skipped": 0}
     fc = {p.name: p.read_text() for p in out_c.glob("*.out")}
     assert fc == fa and len(log_c.committed_keys()) == 8
-
-
-def test_metrics_instrumentation(spark, tmp_path):
-    import pandas as pd
-
-    mdir = str(tmp_path / "metrics")
-
-    def double(batches):
-        for pdf in batches:
-            yield pd.DataFrame({"v": pdf["id"] * 2})
-
-    df = spark.range(1000).repartition(4)
-    out = df.mapInPandas(
-        metrics.instrumented(double, mdir, "job1", "double"), "v long"
-    )
-    assert out.count() == 1000
-    m = metrics.metrics_table(spark, mdir)
-    rows = m.collect()
-    assert {r["stage"] for r in rows} == {"double"}
-    assert sum(r["rows_in"] for r in rows) == 1000
-    assert sum(r["rows_out"] for r in rows) == 1000
-    summ = metrics.stage_summary(m).collect()[0]
-    assert summ["n_partitions"] == 4
 
 
 def test_pyramid_build_and_viewport_pruning(spark, tmp_path):

@@ -257,6 +257,31 @@ def test_knn_rejects_out_of_frame_targets(spark):
         knn_op.knn_join(qdf, tdf, k=1)
 
 
+def test_knn_leaves_no_cached_blocks_on_early_exit(spark):
+    """knn_join persists its target projection before it knows the target
+    count. The empty-target return, the out-of-frame ValueError and an
+    error raised later in the join must release it as the success path
+    does: nothing may stay registered with the SQL cache manager."""
+    from pyspark.errors import AnalysisException
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    schema = "media_ref string, cx long, cy long"
+    qdf = spark.createDataFrame([(1, 150, 150)], "q_id long, qx long, qy long")
+    empty = spark.createDataFrame([], schema)
+    far = spark.createDataFrame([("a", 100, 100), ("b", 200000, 50)], schema)
+    near = spark.createDataFrame([("a", 100, 100)], schema)
+    for level in (None, 5):  # stats-first and grid-first paths
+        assert knn_op.knn_join(qdf, empty, k=1, level=level).count() == 0
+        assert cache.isEmpty(), f"empty targets, level={level}"
+        with pytest.raises(ValueError, match="re-frame"):
+            knn_op.knn_join(qdf, far, k=1, level=level)
+        assert cache.isEmpty(), f"out-of-frame targets, level={level}"
+        with pytest.raises(AnalysisException, match="no_such_col"):
+            knn_op.knn_join(qdf, near, k=1, level=level, x="no_such_col")
+        assert cache.isEmpty(), f"failed join, level={level}"
+
+
 def test_fused_stats_and_histogram_bit_identical(spark):
     """Round-4 fusion: one decode pass emitting both row families must be
     bit-identical to the separate tile_pixel_stats / tile_histogram ops."""

@@ -33,8 +33,14 @@ def _run(spark, cells):
         [(i, j, x) for (i, j), x in cells.items()], "ci long, cj long, x long"
     )
     r = spatial_stats.morans_i_components(df).collect()[0]
-    num = None if r["moran_num"] is None else int(r["moran_num"])
-    return (r["n_cells"], r["w_pairs"], num if num is not None else 0, int(r["moran_den"]))
+    for name in ("moran_num", "moran_den"):
+        # the hi/lo int64 pair: value = hi·2³² + lo with 0 ≤ lo < 2³²
+        hi, lo = r[f"{name}_hi"], r[f"{name}_lo"]
+        assert (hi is None) == (lo is None)
+        assert lo is None or (isinstance(lo, int) and 0 <= lo < 2**32)
+    num = 0 if r["moran_num_hi"] is None else r["moran_num_hi"] * 2**32 + r["moran_num_lo"]
+    den = r["moran_den_hi"] * 2**32 + r["moran_den_lo"]
+    return (r["n_cells"], r["w_pairs"], num, den)
 
 
 cells_st = st.dictionaries(
